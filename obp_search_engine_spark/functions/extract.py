@@ -1,4 +1,4 @@
-"""HTML link + text extraction (Arrow-vectorized).
+"""HTML link + text extraction: the pure oracles and the crawl's one kernel.
 
 Reference analogues:
   - link extraction <- GetConnections peer-list fetch + discovered-peer
@@ -6,11 +6,15 @@ Reference analogues:
     the reference's "links" are closest-peer IDs, ours are <a href> targets.
   - text extraction <- GetItems/GetProfile payload decode
     (crawler/rpc/rpc.go:89-147); input_hint requires the extracted text to
-    be byte-identical per url, so ``extract_text`` is a deterministic pure
-    function shared by the fixture generator (golden column) and the UDF.
+    be byte-identical per url, so ``extract_text`` and the kernel share ONE
+    text pipeline (``_text_of``), also used by the fixture generator's
+    golden column.
 
-Both UDFs are pandas UDFs over the raw ``html BINARY`` column — per-batch
-Arrow transfer, vectorized regex via pandas .str where possible.
+``extract_links`` / ``extract_text`` are the pure per-page oracles.
+``harvest_batch`` is the crawl round's single extraction kernel: one utf-8
+decode per page yields its canonical outlinks and, optionally, its text.
+``harvest_col`` applies it to an ``html BINARY`` column as a pandas UDF
+(one Arrow transfer of the html per batch).
 """
 
 from __future__ import annotations
@@ -19,15 +23,35 @@ import html as _htmllib
 import re
 
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .urls import canonicalize_url
 
 _HREF_RE = re.compile(r"""<a\s[^>]*?href\s*=\s*["']([^"'<>\s]+)["']""", re.IGNORECASE)
 _SCRIPT_STYLE_RE = re.compile(
     r"<(script|style)\b[^>]*>.*?</\1\s*>", re.IGNORECASE | re.DOTALL
 )
 _TAG_RE = re.compile(r"<[^>]+>")
-_WS_RE = re.compile(r"\s+")
+
+
+def _text_of(doc: str) -> str:
+    """Text of a decoded document — the byte-identical invariant's single
+    definition.
+
+    Pipeline: drop <script>/<style> subtrees -> tags -> single space -> HTML
+    entity unescape -> collapse whitespace -> strip. Every step is
+    order-fixed so output is a pure function of input.
+    """
+    doc = _SCRIPT_STYLE_RE.sub(" ", doc)
+    doc = _TAG_RE.sub(" ", doc)
+    doc = _htmllib.unescape(doc)
+    # " ".join(split()) == re.sub(r"\s+", " ", doc).strip() byte-for-byte
+    # (str.split() and regex \s agree on unicode whitespace; verified over
+    # an adversarial corpus) but is ~4x faster — this step was the UDF's
+    # single hottest line (4.1k docs/s vs 60k+/s for every other step).
+    return " ".join(doc.split())
 
 
 def extract_links(html_bytes: bytes | None) -> list[str]:
@@ -42,37 +66,11 @@ def extract_links(html_bytes: bytes | None) -> list[str]:
 
 
 def extract_text(html_bytes: bytes | None) -> str | None:
-    """Deterministic text extraction — the byte-identical invariant.
-
-    Pipeline: utf-8 decode (replace) -> drop <script>/<style> subtrees ->
-    tags -> single space -> HTML entity unescape -> collapse whitespace ->
-    strip. Every step is order-fixed so output is a pure function of input.
-    """
+    """Deterministic text extraction (pure function; oracle impl): utf-8
+    decode (replace), then ``_text_of``."""
     if html_bytes is None:
         return None
-    doc = html_bytes.decode("utf-8", errors="replace")
-    doc = _SCRIPT_STYLE_RE.sub(" ", doc)
-    doc = _TAG_RE.sub(" ", doc)
-    doc = _htmllib.unescape(doc)
-    # " ".join(split()) == _WS_RE.sub(" ", doc).strip() byte-for-byte
-    # (str.split() and regex \s agree on unicode whitespace; verified over
-    # an adversarial corpus) but is ~4x faster — this step was the UDF's
-    # single hottest line (4.1k docs/s vs 60k+/s for every other step).
-    return " ".join(doc.split())
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_links_udf(html: pd.Series) -> pd.Series:
-    # bytes -> str once per batch, then a single vectorized findall
-    docs = html.map(
-        lambda b: b.decode("utf-8", errors="replace") if b is not None else ""
-    )
-    return docs.str.findall(_HREF_RE)
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_text, na_action="ignore")
+    return _text_of(html_bytes.decode("utf-8", errors="replace"))
 
 
 _HARVEST_TYPE = T.StructType(
@@ -83,44 +81,17 @@ _HARVEST_TYPE = T.StructType(
 )
 
 
-@F.pandas_udf(_HARVEST_TYPE)
-def extract_links_and_text_udf(html: pd.Series) -> pd.DataFrame:
-    """Single-pass harvest: links + text from ONE Arrow transfer of html.
+def harvest_batch(html: pd.Series, with_text: bool) -> pd.DataFrame:
+    """The extraction kernel: per page, its canonical outlinks (hrefs that
+    do not canonicalize are dropped) and, ``with_text``, its text.
 
-    Two separate UDFs would ship and utf-8-decode the (heavy) html column
-    to Python twice — on a 600k x 12 KB wave that's ~16 GB of duplicated
-    Arrow traffic. One struct-returning UDF halves it.
+    Equal by construction to ``[canonicalize_url(l) for l in
+    extract_links(h)]`` (Nones dropped) and ``extract_text(h)``. Links leave
+    the kernel canonical because they are already Python strings here — a
+    separate canonicalization UDF would ship every exploded link (Zipf
+    corpora: ~10x the page count) through a second Arrow round trip.
+    Without text, the ``text`` field is null.
     """
-    links, texts = [], []
-    for b in html:
-        if b is None:
-            links.append([])
-            texts.append(None)
-            continue
-        doc = b.decode("utf-8", errors="replace")
-        links.append(_HREF_RE.findall(doc))
-        doc = _SCRIPT_STYLE_RE.sub(" ", doc)
-        doc = _TAG_RE.sub(" ", doc)
-        doc = _htmllib.unescape(doc)
-        texts.append(" ".join(doc.split()))  # == _WS_RE.sub+strip, ~4x faster
-    return pd.DataFrame({"links": links, "text": texts})
-
-
-@F.pandas_udf(_HARVEST_TYPE)
-def extract_canonical_links_and_text_udf(html: pd.Series) -> pd.DataFrame:
-    """Single-pass harvest with links CANONICALIZED in the same Python
-    visit (invalid urls dropped).
-
-    Why: the spill path previously extracted raw links here, wrote them,
-    and then the frontier-merge job shipped every exploded link (Zipf
-    corpora: ~10x the page count) through a SECOND ArrowEvalPython stage
-    just to run canonicalize_url. The links are already Python strings in
-    this loop — canonicalizing here deletes that entire Arrow round trip
-    from the merge job. Byte-identical by construction: same
-    canonicalize_url pure function (functions/urls.py), equality with the
-    two-stage path asserted in tests/test_extract.py."""
-    from .urls import canonicalize_url
-
     links, texts = [], []
     for b in html:
         if b is None:
@@ -131,38 +102,22 @@ def extract_canonical_links_and_text_udf(html: pd.Series) -> pd.DataFrame:
         links.append(
             [c for l in _HREF_RE.findall(doc) if (c := canonicalize_url(l)) is not None]
         )
-        doc = _SCRIPT_STYLE_RE.sub(" ", doc)
-        doc = _TAG_RE.sub(" ", doc)
-        doc = _htmllib.unescape(doc)
-        texts.append(" ".join(doc.split()))
+        texts.append(_text_of(doc) if with_text else None)
     return pd.DataFrame({"links": links, "text": texts})
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_canonical_links_udf(html: pd.Series) -> pd.Series:
-    """Links-only variant of extract_canonical_links_and_text_udf (the
-    spill path without document extraction)."""
-    from .urls import canonicalize_url
+def _harvest_udf(with_text: bool):
+    @F.pandas_udf(_HARVEST_TYPE)
+    def harvest_kernel(html: pd.Series) -> pd.DataFrame:
+        return harvest_batch(html, with_text)
 
-    out = []
-    for b in html:
-        if b is None:
-            out.append([])
-            continue
-        doc = b.decode("utf-8", errors="replace")
-        out.append(
-            [c for l in _HREF_RE.findall(doc) if (c := canonicalize_url(l)) is not None]
-        )
-    return pd.Series(out)
+    return harvest_kernel
 
 
-def links_from_pages(pages_df, url_col: str = "url"):
-    """pages -> (src_url, link) exploded edge list.
+_HARVEST_UDFS = {flag: _harvest_udf(flag) for flag in (False, True)}
 
-    The UDTF analogue of the reference's GetConnections fan-out
-    (crawler/rpc/rpc.go:62-86): one row per outgoing link.
-    """
-    return pages_df.select(
-        F.col(url_col).alias("src_url"),
-        F.explode(extract_links_udf(F.col("html"))).alias("link"),
-    )
+
+def harvest_col(html: Column, with_text: bool) -> Column:
+    """``struct<links, text>`` of ``harvest_batch`` over an html BINARY
+    column — links and text from ONE Arrow transfer of the (heavy) html."""
+    return _HARVEST_UDFS[with_text](html)

@@ -12,10 +12,11 @@ canonicalizes real URLs so that the frontier / seen-set key is stable:
     - query kept verbatim (no reordering — reordering changes semantics on
       some sites); trailing "?" with empty query stripped
 
-``canonicalize_url`` is the pure-Python single-value function (shared by the
-synthetic-fixture generator and the pytest oracles); ``canonicalize_udf`` is
-the Arrow-vectorized pandas UDF used in the crawl plan. Hashing is JVM-side
-``xxhash64`` (built-in, whole-stage codegen) — the pandas UDF never hashes.
+``canonicalize_url`` is the pure-Python single-value function, shared by the
+synthetic-fixture generator, the pytest oracles and the crawl's extraction
+kernel (``functions/extract.harvest_batch``), which emits links already
+canonical. Hashing is JVM-side ``xxhash64`` (built-in, whole-stage codegen)
+— Python never hashes.
 
 Host extraction is JVM-side ``parse_url(url, 'HOST')``; host_hash is
 ``pmod(xxhash64(host), 2^31-1)`` cast to int.
@@ -25,10 +26,8 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _SCHEME_RE = re.compile(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://")
 _DEFAULT_PORTS = {"http": ":80", "https": ":443"}
@@ -95,36 +94,6 @@ def canonicalize_url(url: str | None) -> str | None:
     if query == "?":
         query = ""
     return f"{scheme}://{authority}{path}{query}"
-
-
-@F.pandas_udf(T.StringType())
-def _canonicalize_pudf(urls: pd.Series) -> pd.Series:
-    """Arrow-vectorized canonicalization.
-
-    Fast path: URLs already canonical by construction (lowercase scheme+host,
-    no fragment/dot-segments/default-port, non-empty path) pass a single
-    vectorized regex and are returned untouched; only the rest go through the
-    per-value pure function. On a crawl corpus the fast path covers the vast
-    majority of candidates, keeping the Python cost ~one regex per batch.
-    """
-    s = urls.astype("object")
-    # fast path: lowercase scheme+host, no port, no fragment, no empty
-    # query, no dot-segments, path present — i.e. already canonical
-    ok = s.str.match(
-        r"^(?!.*#)(?!.*\?$)(?!.*/\.{1,2}(?:/|$))https?://[a-z0-9.\-]+/\S*$",
-        na=False,
-    )
-    out = s.copy()
-    slow = ~ok
-    if slow.any():
-        out[slow] = s[slow].map(canonicalize_url, na_action="ignore")
-    return out
-
-
-#: the function IS pure — the nondeterministic flag only stops Catalyst
-#: from duplicating the Python eval when it pushes a filter on the result
-#: column below the projection (each link would be canonicalized twice).
-canonicalize_udf = _canonicalize_pudf.asNondeterministic()
 
 
 def url_hash_col(url: Column) -> Column:

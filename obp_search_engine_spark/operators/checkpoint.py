@@ -40,10 +40,11 @@ def write_snapshot(df: DataFrame, path: str, shard_col: str | None = "host_hash"
         out = df.withColumn("shard", F.pmod(F.col(shard_col), F.lit(N_FRONTIER_SHARDS)))
         # repartition ON the partition column first: without it a dynamic
         # partitionBy write fans out to tasks x shards files (1024 at 32
-        # cores — measured ANTI-scaling in tools/phase_scaling.py: 5.8 s at
-        # 8c -> 9.1 s at 32c, small-file churn + a serial driver-side
-        # manifest over every footer). One shuffle of slim frontier rows
-        # buys exactly one file per shard at any core count.
+        # cores — measured ANTI-scaling, BENCH/BASELINE.md per-phase
+        # attribution table: 5.8 s at 8c -> 9.1 s at 32c, small-file
+        # churn + a serial driver-side manifest over every footer). One
+        # shuffle of slim frontier rows buys exactly one file per shard at
+        # any core count.
         out = out.repartition(N_FRONTIER_SHARDS, "shard")
         out.write.mode("overwrite").partitionBy("shard").parquet(path)
     else:
@@ -165,38 +166,33 @@ def run_crawl(
     broadcast_batch: bool | str = "auto",
     host_state: DataFrame | None = None,
     broadcast_threshold: int = 100_000,
-    spill_harvest: bool = False,
     extract_documents: bool = False,
     discard_harvest: bool = False,
-    split_harvest_write: bool = False,
 ) -> dict:
     """Run scale-mode crawl rounds; returns summary metrics.
 
     With ckpt_dir set, every round snapshots frontier + metrics and commits
     LATEST; ``resume=True`` continues from the last committed round (seeds
     ignored). Without ckpt_dir, lineage is truncated via localCheckpoint.
+    ``extract_documents=True`` spills each round's harvest — the documents
+    store — to ``<ckpt_dir or /tmp base>/round=<k>/harvest``;
     ``discard_harvest=True`` (benchmarks) deletes the /tmp documents spill
     before returning; otherwise its path is returned as ``harvest_base``.
-
-    ``split_harvest_write=True`` (spill path only): the harvest parquet
-    write runs as a pure-JVM background job over localCheckpoint blocks,
-    overlapping the same round's merge and the NEXT round's Python
-    extraction (the SPARK-44705 alternation experiment). One write in
-    flight at a time on a dedicated 1-worker executor; in ckpt mode the
-    round commit joins the write first, so LATEST never advances past an
-    unflushed harvest.
     """
     start_round = 0
     if resume:
-        assert ckpt_dir, "resume requires ckpt_dir"
+        if not ckpt_dir:
+            raise ValueError("resume requires ckpt_dir")
         k = latest_round(ckpt_dir)
-        assert k is not None, "nothing to resume from"
+        if k is None:
+            raise ValueError("nothing to resume from")
         frontier = load_frontier(spark, ckpt_dir, k)
         if host_state is None:
             host_state = load_host_state(spark, ckpt_dir, k)
         start_round = k
     else:
-        assert seeds, "fresh run requires seeds"
+        if not seeds:
+            raise ValueError("fresh run requires seeds")
         frontier = init_frontier(spark, seeds)
         if ckpt_dir:
             write_snapshot(frontier, os.path.join(_round_dir(ckpt_dir, 0), "frontier"))
@@ -222,20 +218,11 @@ def run_crawl(
     #      the one-worker queue and the run only returns after drain;
     #   3. the bloom seen-set update is submitted in the background and
     #      resolved lazily — the probe first needs it only AFTER the next
-    #      round's harvest write (the big job), which it overlaps.
+    #      round's harvest job (the big job), which it overlaps.
     import concurrent.futures as _cf
 
     writer = _cf.ThreadPoolExecutor(max_workers=1, thread_name_prefix="snap")
     pending_write: _cf.Future | None = None
-    # split-write shape: harvest parquet encodes run on their OWN 1-worker
-    # executor (not `writer`) so a multi-second harvest write never delays
-    # the seen-set update the next round's probe build resolves lazily
-    hwriter = (
-        _cf.ThreadPoolExecutor(max_workers=1, thread_name_prefix="harvest")
-        if split_harvest_write
-        else None
-    )
-    prev_harvest: tuple | None = None  # (future, blocks_df) of round k-1
 
     class _SeenHolder:
         """seen_df handle that transparently resolves an in-flight async
@@ -313,7 +300,7 @@ def run_crawl(
                 due <= broadcast_threshold if broadcast_batch == "auto" else broadcast_batch
             )
             harvest_dir = None
-            if spill_harvest or extract_documents:
+            if extract_documents:
                 base = ckpt_dir or os.path.join(
                     "/tmp", f"crawl_harvest_{spark.sparkContext.applicationId}"
                 )
@@ -333,21 +320,12 @@ def run_crawl(
                 broadcast_batch=bcast,
                 harvest_dir=harvest_dir,
                 extract_documents=extract_documents,
-                async_writer=hwriter,
             )
             docs = res.metrics.get("documents")
-            n_docs = 0
-            keep_harvest = False
-            if docs is not None:
-                # documents exist only on the harvest-spill path (crawl_round
-                # emits them iff 'text' is in the spilled harvest), so the
-                # spill already IS the documents store — text + stats written
-                # once, in the extraction pass; the count reads parquet footers
-                # only. Saves a full text write+read per round vs copying into
-                # a separate documents dir.
-                assert res.metrics.get("documents_inline"), "documents imply spill"
-                n_docs = docs.count()
-                keep_harvest = True
+            # the harvest spill IS the documents store — text + stats written
+            # once, in the extraction pass; the count reads parquet footers
+            # only
+            n_docs = docs.count() if docs is not None else 0
             # stats ride the lineage-truncating localCheckpoint as an
             # Observation: ONE job materializes the merged frontier in memory
             # AND counts size/due/visited — the old separate stats job (a full
@@ -367,16 +345,6 @@ def run_crawl(
             t_ck = time.monotonic()
             frontier = observed.localCheckpoint(eager=True)
             merge_sec = time.monotonic() - t_ck
-            if prev_harvest is not None:
-                # round k-1's background write has had its own round tail
-                # plus all of round k to finish; join it (errors surface
-                # here), stamp its duration into that round's telemetry,
-                # and drop the block reference so ContextCleaner can reap
-                # the checkpointed text blocks
-                prev_harvest[2]["harvest_write_sec"] = round(
-                    float(prev_harvest[0].result()), 3
-                )
-                prev_harvest = None
             got = obs.get
             size, due, visited = int(got["n"]), int(got["due"] or 0), int(got["vis"] or 0)
             if seen.df is not None or seen.future is not None:
@@ -396,23 +364,6 @@ def run_crawl(
                 )
             for df in res.metrics.get("persisted", []):
                 df.unpersist()
-            if harvest_dir is not None and not keep_harvest:
-                # a links-only harvest spill is a per-round intermediate: once
-                # the frontier snapshot is written it is dead weight (a heavy
-                # crawl leaves ~GBs per round otherwise). When it doubles as
-                # the documents store (documents_inline) it is OUTPUT and stays.
-                # Split mode: the background write to this very dir may still
-                # be in flight (it is normally joined only at the next
-                # round's merge) — join it first or the rmtree yanks the
-                # _temporary dir out from under it mid-write.
-                import shutil
-
-                if res.metrics.get("harvest_write_future") is not None:
-                    res.metrics["harvest_write_sec"] = round(
-                        float(res.metrics["harvest_write_future"].result()), 3
-                    )
-                    res.metrics["harvest_write_future"] = None
-                shutil.rmtree(harvest_dir, ignore_errors=True)
             if host_state is not None:
                 from .frontier import update_host_clock
 
@@ -435,24 +386,9 @@ def run_crawl(
                 # phase telemetry (not in ROUND_METRICS_SCHEMA — stripped
                 # before append_metrics): where the round wall actually went
                 "write_sec": round(float(res.metrics.get("write_sec") or 0.0), 3),
-                # split mode, links-only spill: the background write was
-                # already joined at the rmtree — carry its duration here;
-                # the keep-harvest path stamps it when the future resolves
-                # at the next round's merge (or the final drain)
-                **(
-                    {"harvest_write_sec": res.metrics["harvest_write_sec"]}
-                    if res.metrics.get("harvest_write_sec") is not None
-                    else {}
-                ),
                 "merge_sec": round(merge_sec, 3),
             }
             per_round.append(row)
-            if res.metrics.get("harvest_write_future") is not None:
-                prev_harvest = (
-                    res.metrics["harvest_write_future"],
-                    res.metrics["harvest_blocks"],
-                    row,
-                )
             if ckpt_dir:
                 # the whole durability tail (frontier + host_state snapshots,
                 # metrics append, LATEST commit) runs on the one-worker writer
@@ -462,17 +398,7 @@ def run_crawl(
                 # errors surface and commits stay ordered); crash semantics are
                 # unchanged — LATEST advances only after that round's files and
                 # manifests are fully written.
-                def _persist_round(
-                    fr=frontier,
-                    hs=host_state,
-                    row=row,
-                    k=k,
-                    hfut=res.metrics.get("harvest_write_future"),
-                ):
-                    if hfut is not None:
-                        # durability order: LATEST must not advance past an
-                        # unflushed harvest (split-write mode)
-                        hfut.result()
+                def _persist_round(fr=frontier, hs=host_state, row=row, k=k):
                     write_snapshot(fr, os.path.join(_round_dir(ckpt_dir, k), "frontier"))
                     if hs is not None:
                         write_snapshot(
@@ -522,18 +448,8 @@ def run_crawl(
             except Exception:
                 if not exc_in_flight:
                     raise
-            if prev_harvest is not None:
-                try:
-                    prev_harvest[2]["harvest_write_sec"] = round(
-                        float(prev_harvest[0].result()), 3
-                    )
-                except Exception:
-                    if not exc_in_flight:
-                        raise
         finally:
             writer.shutdown(wait=True)
-            if hwriter is not None:
-                hwriter.shutdown(wait=True)
         drain = time.monotonic() - t_drain
     if per_round and drain > 0:
         last = per_round[-1]

@@ -30,8 +30,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.extract import extract_links_udf
-from ..functions.urls import canonicalize_udf, canonicalize_url, with_url_keys
+from ..functions.extract import harvest_col
+from ..functions.urls import canonicalize_url, with_url_keys
 from ..schemas import (
     FRONTIER_SCHEMA,
     FRONTIER_STATE_DONE,
@@ -81,12 +81,45 @@ def fetch_join(batch: DataFrame, pages: DataFrame, broadcast_batch: bool) -> Dat
     return b.hint("shuffle_hash").join(reachable_pages, "url", "inner")
 
 
+def extract_harvest(fetched: DataFrame, documents_ts=None) -> DataFrame:
+    """Fetch-join rows (url, depth, html) -> the round's harvest.
+
+    One pass of the extraction kernel (functions/extract.harvest_batch)
+    over html yields (url, src_depth, _links) with _links already
+    canonical. With ``documents_ts`` the same pass also yields the
+    per-round documents columns — text, fetch_ts and the JVM text stats
+    (SURVEY.md §7 step 6) — so text leaves Python exactly once. html is
+    projected away here: the harvest is what callers reuse and
+    materialize, and caching the raw-html wave at 10^5-10^6 rows x KBs
+    thrashes executor memory for no benefit.
+    """
+    with_text = documents_ts is not None
+    harvested = fetched.select(
+        "url",
+        F.col("depth").alias("src_depth"),
+        harvest_col(F.col("html"), with_text).alias("_h"),
+    )
+    cols = ["url", "src_depth", F.col("_h.links").alias("_links")]
+    if with_text:
+        from ..functions import textstats as ts
+
+        text = F.col("_h.text")
+        cols += [
+            text.alias("text"),
+            F.lit(documents_ts).cast("timestamp").alias("fetch_ts"),
+            ts.lang_id_col(text).alias("lang"),
+            ts.token_count_col(text).alias("n_tokens"),
+            ts.fingerprint_col(text).alias("fp"),
+            ts.quality_score_col(text).alias("quality"),
+        ]
+    return harvested.select(*cols)
+
+
 def discover_links(batch: DataFrame, pages: DataFrame, broadcast_batch: bool = True):
-    """Fetch join + link extraction + canonicalization + validity filter.
+    """Fetch join + link extraction (canonical) + validity filter.
 
     Returns (harvest, candidates):
-      harvest    — (url, src_depth, _links) for wave urls present in pages;
-                   html is projected away before any reuse/caching
+      harvest    — (url, src_depth, _links) for wave urls present in pages
       candidates — (url, src_depth) canonical outlink targets, self-links
                    dropped (reference F1, crawler/crawling/crawler.go:73-77),
                    deduped within the wave.
@@ -102,37 +135,30 @@ def discover_links(batch: DataFrame, pages: DataFrame, broadcast_batch: bool = T
     url so its side needs no exchange (co-located) and, because the build
     side is the wave, no sort either.
     """
-    fetched = fetch_join(batch, pages, broadcast_batch)
-    # harvest = url + extracted link array. This is what gets reused (and
-    # persisted by the caller) — html is extracted from ONCE and never
-    # cached: caching the raw-html wave at 10^5-10^6 rows x KBs thrashes
-    # executor memory for no benefit.
-    harvest = fetched.select(
-        F.col("url"),
-        F.col("depth").alias("src_depth"),
-        extract_links_udf(F.col("html")).alias("_links"),
-    )
+    harvest = extract_harvest(fetch_join(batch, pages, broadcast_batch))
     return harvest, candidates_from_harvest(harvest)
 
 
-def candidates_from_harvest(harvest: DataFrame, canonical: bool = False) -> DataFrame:
+def candidates_from_harvest(harvest: DataFrame, canonical: bool = True) -> DataFrame:
     """(url, src_depth, _links) -> deduped canonical candidates.
 
-    canonical=True: _links were canonicalized inside the extraction UDF
-    (spill path) — the explode/self-filter/groupBy run entirely JVM-side,
-    no Python in this job. canonical=False: raw links pay the
-    canonicalize_udf here (in-memory path)."""
-    links = harvest.select(
-        F.col("url").alias("src"),
-        F.col("src_depth"),
-        F.explode("_links").alias("raw_link"),
-    )
-    if canonical:
-        canon = links.withColumn("link", F.col("raw_link"))
-    else:
-        canon = links.withColumn("link", canonicalize_udf(F.col("raw_link")))
+    _links leave the extraction kernel canonical, so the explode,
+    self-link filter and groupBy run entirely JVM-side — no Python in this
+    job. ``canonical=False`` (raw links) is refused: they would enter the
+    frontier uncanonicalized."""
+    if not canonical:
+        raise ValueError(
+            "candidates_from_harvest needs canonical _links (the extraction "
+            "kernel's output); raw links would enter the frontier "
+            "uncanonicalized"
+        )
     return (
-        canon.filter(F.col("link").isNotNull() & (F.col("link") != F.col("src")))
+        harvest.select(
+            F.col("url").alias("src"),
+            F.col("src_depth"),
+            F.explode("_links").alias("link"),
+        )
+        .filter(F.col("link").isNotNull() & (F.col("link") != F.col("src")))
         .groupBy(F.col("link").alias("url"))
         .agg(F.min("src_depth").alias("src_depth"))
     )
@@ -230,40 +256,31 @@ def crawl_round(
     harvest_dir: str | None = None,
     extract_documents: bool = False,
     wave_override: DataFrame | None = None,
-    async_writer=None,
 ) -> RoundResult:
     """One scale-mode wave. Pure DataFrame plan; caller materializes.
 
     seen_probe: optional callable(candidates_df, frontier_df) -> new urls df
     (the bloom path, operators/seen_set.py); defaults to exact left-anti.
 
-    harvest_dir: when set, the wave's single pass over pages (link + text
-    extraction) SPILLS to parquet and all downstream consumers (candidates,
-    reachability, documents) read the spill — html/text never sit on the
-    executor heap. This is the scale path; the in-memory persist path
-    remains for small fixtures.
+    The harvest has one shape: fetch join, one pass of the extraction
+    kernel, one materialization. Its consumers (candidates, reachability,
+    documents) all read that materialization, so the pages scan and the
+    Python pass run once per round.
 
-    extract_documents: also produce the per-round ``documents`` rows (text
-    extraction + JVM text stats — SURVEY.md §7 step 6); returned as
-    ``res.documents`` for the caller to write.
-
-    async_writer: optional 1-worker Executor enabling the split
-    extract->write shape on the spill path: the extraction output is
-    materialized via localCheckpoint (the Python pass), the parquet
-    encode+write is submitted to the executor, and downstream consumers
-    read the blocks — so the pure-JVM write of wave k overlaps the
-    Python extraction of wave k+1 instead of alternating with it inside
-    one stage (SPARK-44705 strict JVM/Python alternation measured at
-    22/32 threads parked). The future and block handle are returned in
-    metrics["harvest_write_future"/"harvest_blocks"]; the CALLER joins
-    the future before committing the round and drops the block reference
-    afterwards.
+    extract_documents: the kernel also extracts text and the same pass
+    computes the JVM text stats; the harvest is written to parquet at
+    ``harvest_dir`` (required with, and only with, extract_documents) and
+    that file IS the round's documents store, returned as
+    ``res.metrics["documents"]``, a column-pruned view of it. Otherwise
+    the links-only harvest is ``persist()``ed (the default storage level
+    spills to disk) and returned in ``res.metrics["persisted"]`` for the
+    caller to unpersist.
     """
-    if extract_documents and harvest_dir is None:
+    if extract_documents != (harvest_dir is not None):
         raise ValueError(
-            "extract_documents=True requires harvest_dir: text extraction "
-            "lives in the spill pass (the in-memory path never produces a "
-            "text column, so documents would silently be None)"
+            "extract_documents=True requires harvest_dir, and harvest_dir "
+            "is used only with extract_documents: the spilled harvest is "
+            "the round's documents store"
         )
     t0 = time.monotonic()
     write_sec = 0.0  # harvest-spill job time (phase telemetry)
@@ -280,97 +297,25 @@ def crawl_round(
             hot_host_salts=hot_host_salts,
         )
     )
+    harvest = extract_harvest(
+        fetch_join(wave, pages, broadcast_batch),
+        documents_ts=round_ts if extract_documents else None,
+    )
     persisted = []
-    harvest_write_future = None
-    harvest_blocks = None
-    if harvest_dir is not None:
-        # spill path extracts links ALREADY CANONICALIZED (one Python pass;
-        # the merge job then needs no second ArrowEvalPython stage over the
-        # exploded links — see extract_canonical_links_and_text_udf)
-        from ..functions.extract import (
-            extract_canonical_links_and_text_udf,
-            extract_canonical_links_udf,
-        )
-
-        fetched = fetch_join(wave, pages, broadcast_batch)
-        if extract_documents:
-            from ..functions import textstats as ts
-
-            # single Arrow pass over html: links + text together, with the
-            # JVM text stats computed IN the same pass — the spill file IS
-            # the round's documents store (plus _links/src_depth), so text
-            # is written exactly once per round instead of harvest +
-            # documents copies
-            harvested = fetched.select(
-                "url",
-                F.col("depth").alias("src_depth"),
-                extract_canonical_links_and_text_udf(F.col("html")).alias("_h"),
-            ).select(
-                "url", "src_depth",
-                F.col("_h.links").alias("_links"),
-                F.col("_h.text").alias("text"),
-                F.lit(round_ts).cast("timestamp").alias("fetch_ts"),
-                ts.lang_id_col(F.col("_h.text")).alias("lang"),
-                ts.token_count_col(F.col("_h.text")).alias("n_tokens"),
-                ts.fingerprint_col(F.col("_h.text")).alias("fp"),
-                ts.quality_score_col(F.col("_h.text")).alias("quality"),
-            )
-        else:
-            harvested = fetched.select(
-                "url",
-                F.col("depth").alias("src_depth"),
-                extract_canonical_links_udf(F.col("html")).alias("_links"),
-            )
-        t_w = time.monotonic()
-        if async_writer is not None:
-            # split shape: foreground job = fetch join + Arrow extraction +
-            # block store (no parquet encode); the write becomes a pure-JVM
-            # background job over the blocks
-            harvest = harvested.localCheckpoint(eager=True)
-            harvest_blocks = harvest
-
-            def _bg_write(df=harvest, p=harvest_dir):
-                # own FAIR pool: under spark.scheduler.mode=FAIR the write
-                # SHARES cores with the foreground pool instead of taking
-                # FIFO priority over the next extraction (thread-local
-                # property; pinned-thread mode maps it to the JVM thread).
-                # Harmless no-op under FIFO. Returns the write's wall time
-                # so the caller can stamp harvest_write_sec into the round
-                # telemetry (write_sec means extraction-leg-only in split
-                # mode — the A/B needs both numbers).
-                spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", "harvest_write"
-                )
-                t = time.monotonic()
-                df.write.mode("overwrite").parquet(p)
-                return time.monotonic() - t
-
-            harvest_write_future = async_writer.submit(_bg_write)
-            write_sec = time.monotonic() - t_w  # extraction leg only
-        else:
-            harvested.write.mode("overwrite").parquet(harvest_dir)
-            write_sec = time.monotonic() - t_w
-            harvest = spark.read.parquet(harvest_dir)
-        candidates = candidates_from_harvest(harvest, canonical=True)
-    else:
-        harvest, candidates = discover_links(
-            wave, pages, broadcast_batch=broadcast_batch
-        )
-        # the harvest feeds two consumers (candidates + reachability);
-        # persist so the pages scan + extraction happen once per round. It
-        # holds only urls + link arrays — never html.
-        harvest = harvest.persist()
-        persisted.append(harvest)
-
     documents = None
-    documents_inline = False
-    if extract_documents and "text" in harvest.columns:
-        # the spill already carries the stats columns: documents is a
-        # column-pruned VIEW of the written file, not a second copy
+    if extract_documents:
+        t_w = time.monotonic()
+        harvest.write.mode("overwrite").parquet(harvest_dir)
+        write_sec = time.monotonic() - t_w
+        harvest = spark.read.parquet(harvest_dir)
         documents = harvest.select(
             "url", "fetch_ts", "text", "lang", "n_tokens", "fp", "quality"
         )
-        documents_inline = harvest_dir is not None
+    else:
+        # holds only urls + link arrays — never html
+        harvest = harvest.persist()
+        persisted.append(harvest)
+    candidates = candidates_from_harvest(harvest)
 
     # dedup: candidates not already in the frontier (J4 anti-join).
     # shuffle-hash hint: the anti-join's build side is the FRONTIER (the big
@@ -440,10 +385,7 @@ def crawl_round(
         metrics={
             "persisted": persisted,
             "documents": documents,
-            "documents_inline": documents_inline,
             "write_sec": write_sec,
-            "harvest_write_future": harvest_write_future,
-            "harvest_blocks": harvest_blocks,
         },
     )
 
@@ -485,7 +427,9 @@ def crawl_one(
 __all__ = [
     "init_frontier",
     "fetch_join",
+    "extract_harvest",
     "discover_links",
+    "candidates_from_harvest",
     "new_frontier_rows",
     "strict_crawl",
     "crawl_round",

@@ -1,11 +1,11 @@
-"""Partitioned URL-seen membership: bloom shards + cuckoo fallback.
+"""Partitioned URL-seen membership: bloom shards.
 
 Replaces the reference's storage-level dedup (``INSERT IGNORE`` on the
 ``nodes`` PK, crawler/db/mysql.go:293) with something that works at 10^10
 URLs: per-shard bloom filters keyed by ``pmod(host_hash, n_shards)``
-(north_rule: "partitioned bloom-filter URL-seen set sharded by host-hash"),
-with cuckoo-filter shards as the deletion-capable fallback (blooms can't
-delete; the reference deletes items on re-crawl, crawler/db/mysql.go:359).
+(north_rule: "partitioned bloom-filter URL-seen set sharded by host-hash").
+The set only ever grows — the crawl never un-sees a url — so no
+deletion-capable shard kind is needed.
 
 Scale math: at 1% FPR a bloom costs ~9.6 bits/key -> ~12 GB for 10^10 keys,
 sharded into manageable blobs (10^7 keys -> ~12 MB/shard at 1024 shards).
@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from ..schemas import SEEN_SET_SCHEMA
 
 _BLOOM_MAGIC = b"BLM1"
-_CUCKOO_MAGIC = b"CKF1"
 
 
 def _mix64(x: np.ndarray) -> np.ndarray:
@@ -96,101 +95,6 @@ class BloomShard:
 
 
 # ---------------------------------------------------------------------------
-# cuckoo shard (deletion-capable fallback)
-# ---------------------------------------------------------------------------
-class CuckooShard:
-    """Cuckoo filter: 4-slot buckets, 16-bit fingerprints, partial-key
-    cuckoo hashing. Supports delete() — the bloom can't."""
-
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int = 1 << 16, table: np.ndarray | None = None,
-                 n_items: int = 0):
-        assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of 2"
-        self.nb = n_buckets
-        self.table = table if table is not None else np.zeros((n_buckets, self.SLOTS), dtype=np.uint16)
-        self.n_items = n_items
-
-    def _fp(self, keys: np.ndarray) -> np.ndarray:
-        fp = (_mix64(keys.astype(np.uint64)) & np.uint64(0xFFFF)).astype(np.uint16)
-        fp[fp == 0] = 1  # 0 marks an empty slot
-        return fp
-
-    def _i1(self, keys: np.ndarray) -> np.ndarray:
-        return (keys.astype(np.uint64) & np.uint64(self.nb - 1)).astype(np.int64)
-
-    def _alt(self, i: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        return (i ^ _mix64(fp.astype(np.uint64)).astype(np.int64)) & (self.nb - 1)
-
-    def add_many(self, keys: np.ndarray) -> int:
-        """Insert keys; returns number inserted (raises on overflow)."""
-        fps, i1s = self._fp(keys), self._i1(keys)
-        for fp, i1 in zip(fps, i1s):
-            self._add_one(int(fp), int(i1))
-        self.n_items += int(len(keys))
-        return len(keys)
-
-    def _add_one(self, fp: int, i1: int) -> None:
-        for i in (i1, int(self._alt(np.asarray([i1]), np.asarray([fp], dtype=np.uint16))[0])):
-            row = self.table[i]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = fp
-                return
-        i = i1
-        cur = fp
-        rng = np.random.Generator(np.random.PCG64(fp * 2654435761 % (2**32)))
-        for _ in range(self.MAX_KICKS):
-            s = int(rng.integers(self.SLOTS))
-            cur, self.table[i, s] = int(self.table[i, s]), cur
-            i = int(self._alt(np.asarray([i]), np.asarray([cur], dtype=np.uint16))[0])
-            row = self.table[i]
-            empty = np.nonzero(row == 0)[0]
-            if len(empty):
-                row[empty[0]] = cur
-                return
-        raise OverflowError("cuckoo shard full — resize required")
-
-    def contains_many(self, keys: np.ndarray) -> np.ndarray:
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        fp, i1 = self._fp(keys), self._i1(keys)
-        i2 = self._alt(i1, fp)
-        in1 = (self.table[i1] == fp[:, None]).any(axis=1)
-        in2 = (self.table[i2] == fp[:, None]).any(axis=1)
-        return in1 | in2
-
-    def delete_many(self, keys: np.ndarray) -> int:
-        removed = 0
-        fps, i1s = self._fp(keys), self._i1(keys)
-        i2s = self._alt(i1s, fps)
-        for fp, i1, i2 in zip(fps, i1s, i2s):
-            for i in (i1, i2):
-                slots = np.nonzero(self.table[i] == fp)[0]
-                if len(slots):
-                    self.table[i, slots[0]] = 0
-                    removed += 1
-                    break
-        self.n_items -= removed
-        return removed
-
-    def to_bytes(self) -> bytes:
-        return _CUCKOO_MAGIC + struct.pack("<QQ", self.nb, self.n_items) + self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, b: bytes) -> "CuckooShard":
-        assert b[:4] == _CUCKOO_MAGIC, "not a cuckoo blob"
-        nb, n = struct.unpack("<QQ", b[4:20])
-        table = np.frombuffer(b[20:], dtype=np.uint16).reshape(nb, cls.SLOTS).copy()
-        return cls(n_buckets=nb, table=table, n_items=n)
-
-
-def shard_from_bytes(b: bytes):
-    return BloomShard.from_bytes(b) if b[:4] == _BLOOM_MAGIC else CuckooShard.from_bytes(b)
-
-
-# ---------------------------------------------------------------------------
 # DataFrame-level build / update / probe
 # ---------------------------------------------------------------------------
 def _shard_col(n_shards: int):
@@ -201,24 +105,21 @@ def build_seen_set(
     spark,
     urls_df: DataFrame,
     n_shards: int = 32,
-    kind: str = "bloom",
     capacity_per_shard: int = 1 << 20,
 ) -> DataFrame:
-    """Build shard blobs from (url_hash, host_hash) rows — one grouped-pandas
-    task per shard, each emitting one (shard, kind, blob, n) row."""
+    """Build bloom shard blobs from (url_hash, host_hash) rows — one
+    grouped-pandas task per shard, each emitting one (shard, kind, blob, n)
+    row."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         keys = pdf["url_hash"].to_numpy(np.int64).astype(np.uint64)
         keys = np.unique(keys)
-        if kind == "bloom":
-            f = BloomShard.sized_for(capacity_per_shard)
-        else:
-            f = CuckooShard(n_buckets=max(1 << 10, int(2 ** np.ceil(np.log2(capacity_per_shard / 3)))))
+        f = BloomShard.sized_for(capacity_per_shard)
         f.add_many(keys)
         return pd.DataFrame(
             {
                 "shard": [int(pdf["shard"].iloc[0])],
-                "kind": [kind],
+                "kind": ["bloom"],
                 "filter_bytes": [f.to_bytes()],
                 "n_items": [len(keys)],
             }
@@ -231,30 +132,20 @@ def build_seen_set(
     )
 
 
-def update_seen_set(
-    seen: DataFrame, new_urls: DataFrame, n_shards: int = 32,
-    kind: str = "bloom",
-) -> DataFrame:
+def update_seen_set(seen: DataFrame, new_urls: DataFrame, n_shards: int = 32) -> DataFrame:
     """Insert new url_hashes into their shard blobs (cogrouped update —
-    Iceberg-style: emits NEW blob rows; caller snapshots).
-
-    ``kind`` governs the filter created for a shard that has NO existing
-    blob (keys hashing to a previously-empty shard) — it must match the
-    set's build kind: silently creating a bloom blob inside a cuckoo set
-    would strand those keys undeletable."""
+    Iceberg-style: emits NEW blob rows; caller snapshots). A shard with no
+    blob yet (keys hashing to a previously-empty shard) gets a fresh one."""
 
     def upd(keys_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
         if blob_pdf.empty:
-            blob_kind = kind
-            if blob_kind == "cuckoo":
-                f = CuckooShard(n_buckets=1 << 16)
-            else:
-                f = BloomShard.sized_for(1 << 20)
+            f = BloomShard.sized_for(1 << 20)
             shard = int(keys_pdf["shard"].iloc[0])
+            n_old = 0
         else:
-            f = shard_from_bytes(bytes(blob_pdf["filter_bytes"].iloc[0]))
+            f = BloomShard.from_bytes(bytes(blob_pdf["filter_bytes"].iloc[0]))
             shard = int(blob_pdf["shard"].iloc[0])
-            blob_kind = str(blob_pdf["kind"].iloc[0])
+            n_old = int(blob_pdf["n_items"].iloc[0])
         n_new = 0
         if not keys_pdf.empty:
             keys = np.unique(keys_pdf["url_hash"].to_numpy(np.int64).astype(np.uint64))
@@ -263,9 +154,9 @@ def update_seen_set(
         return pd.DataFrame(
             {
                 "shard": [shard],
-                "kind": [blob_kind],
+                "kind": ["bloom"],
                 "filter_bytes": [f.to_bytes()],
-                "n_items": [int(f.n_items) if blob_kind == "cuckoo" else int((blob_pdf["n_items"].iloc[0] if not blob_pdf.empty else 0) + n_new)],
+                "n_items": [n_old + n_new],
             }
         )
 
@@ -274,47 +165,6 @@ def update_seen_set(
         keys.groupBy("shard")
         .cogroup(seen.groupBy("shard"))
         .applyInPandas(upd, SEEN_SET_SCHEMA)
-    )
-
-
-def remove_from_seen_set(
-    seen: DataFrame, removed_urls: DataFrame, n_shards: int = 32
-) -> DataFrame:
-    """Delete url_hashes from their shards — ONLY cuckoo shards support
-    this (the reference deletes items on re-crawl, crawler/db/mysql.go:359;
-    blooms can't unset bits, which is why the deletion-capable shard kind
-    exists). Raises on bloom shards with deletions pending."""
-
-    def rm(keys_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
-        if blob_pdf.empty:
-            # nothing stored for this shard; deletion is a no-op
-            return pd.DataFrame(
-                {"shard": [], "kind": [], "filter_bytes": [], "n_items": []}
-            )
-        kind = str(blob_pdf["kind"].iloc[0])
-        f = shard_from_bytes(bytes(blob_pdf["filter_bytes"].iloc[0]))
-        if not keys_pdf.empty:
-            if kind != "cuckoo":
-                raise ValueError(
-                    "cannot delete from a bloom shard — rebuild it or use "
-                    "kind='cuckoo' (build_seen_set(kind='cuckoo'))"
-                )
-            keys = np.unique(keys_pdf["url_hash"].to_numpy(np.int64).astype(np.uint64))
-            f.delete_many(keys)
-        return pd.DataFrame(
-            {
-                "shard": [int(blob_pdf["shard"].iloc[0])],
-                "kind": [kind],
-                "filter_bytes": [f.to_bytes()],
-                "n_items": [int(f.n_items)],
-            }
-        )
-
-    keys = removed_urls.select("url_hash", _shard_col(n_shards).alias("shard"))
-    return (
-        keys.groupBy("shard")
-        .cogroup(seen.groupBy("shard"))
-        .applyInPandas(rm, SEEN_SET_SCHEMA)
     )
 
 
@@ -341,7 +191,7 @@ def bloom_probe(
             return pd.DataFrame(columns=cols + ["maybe_seen"])
         if blob_pdf.empty:
             return cand_pdf.assign(maybe_seen=False)
-        f = shard_from_bytes(bytes(blob_pdf["filter_bytes"].iloc[0]))
+        f = BloomShard.from_bytes(bytes(blob_pdf["filter_bytes"].iloc[0]))
         keys = cand_pdf["url_hash"].to_numpy(np.int64).astype(np.uint64)
         return cand_pdf.assign(maybe_seen=f.contains_many(keys))
 

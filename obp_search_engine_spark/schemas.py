@@ -61,14 +61,14 @@ FRONTIER_STATE_FAILED = "failed"
 NEVER_CRAWLED_SENTINEL = "2000-01-01 00:00:00"
 
 # ---------------------------------------------------------------------------
-# seen_set — partitioned membership shards (bloom, cuckoo fallback for
-# deletions). Replaces the reference's INSERT IGNORE PK dedup
-# (crawler/db/mysql.go:293) with something that works at 10^10 URLs.
+# seen_set — partitioned bloom membership shards. Replaces the reference's
+# INSERT IGNORE PK dedup (crawler/db/mysql.go:293) with something that works
+# at 10^10 URLs.
 # ---------------------------------------------------------------------------
 SEEN_SET_SCHEMA = T.StructType(
     [
         T.StructField("shard", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),  # bloom | cuckoo
+        T.StructField("kind", T.StringType(), False),  # always "bloom"
         T.StructField("filter_bytes", T.BinaryType(), False),
         T.StructField("n_items", T.LongType(), False),
     ]

@@ -71,9 +71,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # zstd for OUR writes (snapshots, harvest/documents spills): trades
         # CPU (scales with cores) for write bytes (the shared bus — the
-        # non-scaling resource). Measured in tools/phase_scaling.py: the
-        # merge+snapshot phase went 8c 5.8s / 32c 8.1s (snappy) to
-        # 8c 5.2s / 32c 4.7s (zstd); extraction-spill phase unchanged.
+        # non-scaling resource). Measured in the BENCH/BASELINE.md per-phase
+        # attribution table: the merge+snapshot phase went 8c 5.8s / 32c
+        # 8.1s (snappy) to 8c 5.2s / 32c 4.7s (zstd); extraction-spill
+        # phase unchanged.
         .config(
             "spark.sql.parquet.compression.codec",
             os.environ.get("SPARK_GRAFT_CODEC", "zstd"),

@@ -138,42 +138,3 @@ def test_crawl_one_on_demand_and_recrawl(spark):
     got2 = {(r.url, r.depth, r.state) for r in f2.select("url", "depth", "state").collect()}
     assert got2 == got1
     assert f2.count() == 3
-
-
-def test_split_harvest_write_equivalent(spark, tmp_path):
-    """split_harvest_write moves the harvest parquet encode to a background
-    JVM job over localCheckpoint blocks (the SPARK-44705 alternation
-    experiment). It must be a pure scheduling change: per-round visit and
-    frontier counts identical to the synchronous spill path, and the
-    spilled documents parquet byte-equivalent (same rows, same columns)."""
-    import os
-
-    from obp_search_engine_spark.operators.checkpoint import run_crawl
-    from obp_search_engine_spark.sources.pages import synth_pages_df
-
-    pages = synth_pages_df(spark, n_pages=300, n_hosts=6, seed=9).cache()
-    seed_url = pages.orderBy("url").first().url
-    results = {}
-    spills = {}
-    for mode in (False, True):
-        ckpt = str(tmp_path / f"ckpt_split_{mode}")
-        res = run_crawl(
-            spark, pages, seeds=[seed_url], rounds=3, ckpt_dir=ckpt,
-            extract_documents=True, split_harvest_write=mode,
-        )
-        results[mode] = [
-            (r["round"], r["visited"], r["frontier_size"], r["n_documents"])
-            for r in res["per_round"]
-        ]
-        rows = []
-        for r in res["per_round"]:
-            h = spark.read.parquet(
-                os.path.join(ckpt, f"round={r['round']}", "harvest")
-            )
-            rows.extend(
-                (x["url"], x["text"], x["n_tokens"], x["fp"])
-                for x in h.select("url", "text", "n_tokens", "fp").collect()
-            )
-        spills[mode] = sorted(rows)
-    assert results[True] == results[False]
-    assert spills[True] == spills[False] and len(spills[True]) > 0

@@ -153,14 +153,13 @@ def test_streaming_rounds_advance_checkpoint(spark):
     from obp_search_engine_spark.sources.pages import synth_pages_df
     from obp_search_engine_spark.streaming.rounds import stream_crawl_rounds
 
-    from obp_search_engine_spark.functions.extract import extract_links_udf
+    from obp_search_engine_spark.functions.extract import harvest_col
 
     pages = synth_pages_df(spark, 200, 4, seed=9).cache()
     # a seed page with no outlinks would exhaust the crawl in one round —
     # pick the first url that actually links out
-    seed_url = (
-        pages.filter(F.size(extract_links_udf("html")) > 0).orderBy("url").first().url
-    )
+    links = harvest_col(F.col("html"), with_text=False)["links"]
+    seed_url = pages.filter(F.size(links) > 0).orderBy("url").first().url
     with tempfile.TemporaryDirectory() as ckpt:
         q = stream_crawl_rounds(
             spark, pages, ckpt, seeds=[seed_url], tick_seconds=1, max_rounds=2

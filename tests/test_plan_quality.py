@@ -134,6 +134,21 @@ def test_fetch_join_never_sorts_pages(spark):
     assert "SortMergeJoin" not in p, p
 
 
+def test_candidates_plan_has_one_python_pass(spark):
+    """Links leave the extraction kernel canonical, so the candidates plan
+    runs Python exactly once per page (the kernel) — no second Arrow round
+    trip over the exploded links to canonicalize them."""
+    from obp_search_engine_spark.operators.crawl import discover_links, init_frontier
+    from obp_search_engine_spark.sources.pages import synth_pages_df
+
+    pages = synth_pages_df(spark, n_pages=200, n_hosts=5, seed=7)
+    wave = init_frontier(spark, [f"http://host{i}.example/p/{i}" for i in range(5)])
+    for bcast in (True, False):
+        _harvest, cands = discover_links(wave, pages, broadcast_batch=bcast)
+        p = plan_of(cands)
+        assert p.count("ArrowEvalPython") == 1, p
+
+
 def test_temporal_joins_no_nested_loop(spark):
     """The whole point of the bucketed range join and the union+window
     as-of: NO BroadcastNestedLoopJoin / CartesianProduct anywhere, and

@@ -1,4 +1,4 @@
-"""Bloom/cuckoo seen-set shards: pure-python units + DataFrame build/probe.
+"""Bloom seen-set shards: pure-python units + DataFrame build/probe.
 
 The key property (FIXTURES.md §4 / SURVEY.md §7 step 5): the bloom-probed
 anti-join result must EQUAL the exact anti-join result after the confirm
@@ -31,21 +31,6 @@ def test_bloom_shard_roundtrip():
     assert b2.k == b.k and b2.m == b.m and b2.n_items == b.n_items
 
 
-def test_cuckoo_shard_insert_delete():
-    c = ss.CuckooShard(n_buckets=1 << 12)
-    keys = (np.arange(8_000, dtype=np.uint64) + 1) * np.uint64(0x9E3779B97F4A7C15)
-    c.add_many(keys)
-    assert c.contains_many(keys).all()
-    other = (np.arange(8_000, dtype=np.uint64) + np.uint64(10**15)) * np.uint64(31)
-    assert c.contains_many(other).mean() < 0.05
-    # delete half; deleted keys must vanish, kept keys must remain
-    c.delete_many(keys[:4_000])
-    assert not c.contains_many(keys[:4_000]).any() or c.contains_many(keys[:4_000]).mean() < 0.05
-    assert c.contains_many(keys[4_000:]).all()
-    c2 = ss.CuckooShard.from_bytes(c.to_bytes())
-    assert c2.contains_many(keys[4_000:]).all()
-
-
 def test_build_update_probe_dataframes(spark):
     urls = [f"http://h{i % 7}.example/p/{i}" for i in range(500)]
     df = with_url_keys(spark.createDataFrame([(u,) for u in urls], "url string"))
@@ -69,31 +54,6 @@ def test_build_update_probe_dataframes(spark):
     seen2 = ss.update_seen_set(seen, fresh, n_shards=8).persist()
     probed2 = ss.bloom_probe(fresh, seen2, n_shards=8)
     assert probed2.filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_cuckoo_seen_set_deletion_dataframe_api(spark):
-    """Delete urls from cuckoo shards (reference deletes items on re-crawl,
-    crawler/db/mysql.go:359); bloom shards refuse."""
-    urls = [f"http://h{i % 5}.example/p/{i}" for i in range(400)]
-    df = with_url_keys(spark.createDataFrame([(u,) for u in urls], "url string"))
-    seen = ss.build_seen_set(spark, df, n_shards=4, kind="cuckoo").persist()
-
-    gone = df.filter(F.col("url").contains("/p/1"))  # /p/1, /p/1x, /p/1xx
-    kept = df.join(gone, "url", "left_anti")
-    seen2 = ss.remove_from_seen_set(seen, gone, n_shards=4).persist()
-
-    # deleted urls no longer (definitely) present; kept ones all still hit
-    gone_probe = ss.bloom_probe(gone, seen2, n_shards=4)
-    assert gone_probe.filter(F.col("maybe_seen")).count() <= int(0.05 * gone.count())
-    kept_probe = ss.bloom_probe(kept, seen2, n_shards=4)
-    assert kept_probe.filter(~F.col("maybe_seen")).count() == 0
-
-    # blooms refuse deletion
-    bseen = ss.build_seen_set(spark, df, n_shards=4, kind="bloom")
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="cuckoo|bloom"):
-        ss.remove_from_seen_set(bseen, gone, n_shards=4).collect()
 
 
 def test_bloom_anti_join_equals_exact(spark):

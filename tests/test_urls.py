@@ -2,11 +2,9 @@
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
 
 from obp_search_engine_spark.functions.urls import (
-    canonicalize_udf,
     canonicalize_url,
     with_url_keys,
 )
@@ -43,20 +41,29 @@ def test_canonicalize_idempotent():
             assert canonicalize_url(want) == want
 
 
+def _kernel_links(spark, hrefs):
+    """The extraction kernel's canonical links for one page linking hrefs."""
+    from obp_search_engine_spark.functions.extract import harvest_col
+
+    html = "".join(f'<a href="{h}">x</a>' for h in hrefs).encode()
+    df = spark.createDataFrame([(html,)], "html binary")
+    return df.select(harvest_col(F.col("html"), with_text=False)["links"]).first()[0]
+
+
 def test_canonicalize_udf_matches_pure(spark):
-    raws = [c[0] for c in CASES]
-    df = spark.createDataFrame([(r,) for r in raws], "url string")
-    got = df.select(canonicalize_udf("url").alias("c")).toPandas()["c"]
-    want = pd.Series([c[1] for c in CASES], name="c")
-    assert list(got.where(got.notna(), None)) == list(want.where(want.notna(), None))
+    """The extraction kernel (the crawl's one canonicalizing pass)
+    canonicalizes every href exactly as canonicalize_url does, dropping
+    the ones it rejects."""
+    # an href is one whitespace-free token, so only those CASES can appear
+    cases = [(raw, want) for raw, want in CASES if raw and raw.split() == [raw]]
+    got = _kernel_links(spark, [raw for raw, _ in cases])
+    assert got == [want for _, want in cases if want is not None]
 
 
 def test_udf_fast_path_covers_canonical_urls(spark):
     # urls that are already canonical must come back unchanged
     urls = [f"http://host{i}.example/p/{i}" for i in range(50)]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = [r.c for r in df.select(canonicalize_udf("url").alias("c")).collect()]
-    assert got == urls
+    assert _kernel_links(spark, urls) == urls
 
 
 def test_with_url_keys(spark):

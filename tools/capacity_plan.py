@@ -76,7 +76,7 @@ def plan(
             "bloom_total_gb": round(bloom_gb, 1),
             "blob_mb_per_shard": round(bloom_gb * 1024 / shards, 2),
             "rule": "BloomShard.sized_for: m = -n*ln(fpr)/ln(2)^2, "
-                    "sharded like the frontier; cuckoo shards for deletions",
+                    "sharded like the frontier",
         },
         "per_round": {
             "wave_urls": wave,
